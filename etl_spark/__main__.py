@@ -472,7 +472,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "route-view":
         from etl_spark.cdc.route_epochs import consistent_view
 
-        epoch, views = consistent_view(spark, args.base, args.source)
+        try:
+            epoch, views = consistent_view(spark, args.base, args.source)
+        except FileNotFoundError as e:
+            # no router epoch has completed yet: keep the JSON-line contract
+            print(json.dumps({"error": "no_complete_epoch", "detail": str(e)}))
+            return 1
         print(json.dumps({
             "epoch": epoch,
             "tables": {name: int(df.count()) for name, df in sorted(views.items())},

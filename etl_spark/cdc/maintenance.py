@@ -65,10 +65,7 @@ def delete_conversations(
         )
     spark = table.spark
     ids = spark.createDataFrame([(c,) for c in conv_ids], ["conv_id"])
-    buckets = sorted(
-        r["_b"] for r in ids.select(table.bucket_expr(F.col("conv_id")).alias("_b"))
-        .distinct().collect()
-    )
+    buckets = sorted({table.bucket_of(c) for c in conv_ids})
     wm = table.watermark_any() or "1970-01-01 00:00:00"
     current = table.read_buckets(buckets, with_internal=True, fold=True)
     doomed = current.join(F.broadcast(ids), "conv_id", "left_semi")

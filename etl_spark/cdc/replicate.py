@@ -110,31 +110,11 @@ def sync_replica(src: LakeTable, dst: LakeTable) -> SyncStats:
     # re-insert replicates instead of being blocked forever (divergence
     # found by the test_property_replicate probe). Fall back to the
     # watermark (deletion-wins-ties, same as GDPR) only when no expunge
-    # snapshot survives metadata-log truncation.
-    horizons = [
-        s["before_op_ts"]
-        for s in src.snapshots()
-        if s.get("kind") == "expunge" and "before_op_ts" in s
-    ]
-    stamp = None
-    if horizons:
-        # The horizon strings are whatever expunge_tombstones was handed
-        # (Spark's to_timestamp is laxer than fromisoformat), and distinct
-        # expunge snapshots may mix naive and tz-aware stamps. A sync must
-        # DEGRADE to the watermark stamp on any parse trouble, never crash
-        # — otherwise one odd horizon string bricks replication forever.
-        try:
-            parsed = []
-            for h in horizons:
-                d = dt.datetime.fromisoformat(str(h))
-                if d.tzinfo is not None:
-                    d = d.astimezone(dt.timezone.utc).replace(tzinfo=None)
-                parsed.append(d)
-            stamp_ts = max(parsed) - dt.timedelta(microseconds=1)
-            stamp = F.lit(stamp_ts).cast("timestamp")
-        except (ValueError, TypeError):
-            stamp = None
-    if stamp is None:
+    # snapshot with a parseable horizon survives metadata-log truncation.
+    newest = _newest_horizon(src.snapshots())
+    if newest is not None:
+        stamp = F.lit(newest - dt.timedelta(microseconds=1)).cast("timestamp")
+    else:
         wm = src.watermark_any()
         stamp = (
             F.to_timestamp(F.lit(wm)) if wm else F.lit(None).cast("timestamp")
@@ -147,6 +127,29 @@ def sync_replica(src: LakeTable, dst: LakeTable) -> SyncStats:
     )
     stats = apply_batch(dst, changes, epoch=cur_v, source=tag)
     return SyncStats(src_version=cur_v, mode=mode, apply=stats)
+
+
+def _newest_horizon(snapshots: list[dict]) -> dt.datetime | None:
+    """Newest expunge horizon in the snapshot log, as a naive UTC
+    datetime, or None when no expunge snapshot carries a parseable one.
+
+    The horizon strings are whatever ``expunge_tombstones`` was handed
+    (Spark's to_timestamp is laxer than fromisoformat), and distinct
+    expunge snapshots may mix naive and tz-aware stamps. Each is parsed on
+    its own and an unparseable one is skipped: one odd string must neither
+    crash a sync nor discard the horizons that do parse."""
+    parsed = []
+    for s in snapshots:
+        if s.get("kind") != "expunge" or "before_op_ts" not in s:
+            continue
+        try:
+            d = dt.datetime.fromisoformat(str(s["before_op_ts"]))
+        except (ValueError, TypeError):
+            continue
+        if d.tzinfo is not None:
+            d = d.astimezone(dt.timezone.utc).replace(tzinfo=None)
+        parsed.append(d)
+    return max(parsed, default=None)
 
 
 def create_replica(src: LakeTable, path: str) -> LakeTable:

@@ -12,6 +12,7 @@ Iceberg-style stable field IDs so renames/readds can't silently remap data.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import lru_cache
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -153,6 +154,9 @@ class TableSchema:
         return TableSchema(new_fields, next_id), changes
 
 
+# Parsing goes through the JVM (one py4j round trip); a table has few
+# distinct type strings and every read plan re-parses them per column.
+@lru_cache(maxsize=1024)
 def _parse_type(ddl: str) -> T.DataType:
     return T.StructType.fromDDL(f"`x` {ddl}")[0].dataType
 

@@ -76,6 +76,87 @@ _INTERNAL_TYPES = {
 }
 ORDER_COLS = ["_op_ts", "_lsn"]
 
+# -- driver-side bucket hash ----------------------------------------------------
+# Spark's ``xxhash64`` (seed 42) is standard XXH64 over the value's bytes:
+# a string hashes its UTF-8 bytes, an int its 4 little-endian bytes, a
+# bigint its 8, and NULL leaves the seed untouched. Evaluating it here
+# instead of in a one-row DataFrame saves two Spark jobs per point lookup.
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_HASH_SEED = 42
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _round(v[j], int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little"))
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+_INT_WIDTH = {"int": 4, "bigint": 8}
+
+
+def bucket_of(value, key_type: str, num_buckets: int) -> int:
+    """``pmod(xxhash64(value), num_buckets)`` computed on the driver —
+    bit-identical to ``LakeTable.bucket_expr`` for a bucket key of Spark
+    type ``key_type`` (``string``, ``int`` or ``bigint``)."""
+    if value is None:
+        h = _HASH_SEED
+    elif key_type == "string":
+        if not isinstance(value, str):
+            raise TypeError(f"string bucket key needs a str, got {value!r}")
+        h = _xxh64(value.encode("utf-8"), _HASH_SEED)
+    elif key_type in _INT_WIDTH:
+        width = _INT_WIDTH[key_type]
+        if not isinstance(value, int) or isinstance(value, bool):
+            raise TypeError(f"{key_type} bucket key needs an int, got {value!r}")
+        try:
+            data = value.to_bytes(width, "little", signed=True)
+        except OverflowError:
+            raise ValueError(f"{value} does not fit a {key_type} bucket key") from None
+        h = _xxh64(data, _HASH_SEED)
+    else:
+        raise TypeError(
+            f"driver-side bucket hash supports string/int/bigint bucket keys, "
+            f"not {key_type!r}"
+        )
+    # Spark's xxhash64 is a signed long; Python's % with a positive
+    # modulus already matches pmod
+    signed = h - (1 << 64) if h >> 63 else h
+    return signed % int(num_buckets)
+
 
 # ConcurrentCommitError lives in metastore (the backend raises it from the
 # version reservation); re-exported here so callers keep importing it from
@@ -488,6 +569,23 @@ class LakeTable:
         """Deterministic bucket id for a key column (matches write path)."""
         return F.pmod(F.xxhash64(col), F.lit(self.num_buckets)).cast("int")
 
+    def bucket_of(self, key_value) -> int:
+        """Bucket id of one bucket-key value, hashed on the driver under the
+        key's declared type — the same id ``bucket_expr`` gives its row."""
+        key_type = {f.name: f.type for f in self.schema().fields}[self.bucket_key]
+        return bucket_of(key_value, key_type, self.num_buckets)
+
+    def _file_schema(self, schema_version: int) -> T.StructType:
+        """Columns every data file written under ``schema_version`` holds:
+        that version's payload plus the stored internals (``_bucket`` is a
+        directory, not a column). Reads declare it instead of inferring it
+        from footers, which would cost one Spark job per scan."""
+        st = self.written_schema(schema_version).to_struct()
+        for c in INTERNAL_COLS:
+            if c != "_bucket":
+                st = st.add(c, _INTERNAL_TYPES[c])
+        return st
+
     def _empty(self, with_internal: bool) -> DataFrame:
         st = self.schema().to_struct()
         if with_internal:
@@ -519,6 +617,10 @@ class LakeTable:
         Time pruning returns a candidate SUPERSET of the window (file-set
         granularity; tombstone/NULL sets always scan) — callers wanting
         exact bounds apply the residual row filter (``snapshot_df`` does).
+
+        Planning launches no Spark job: each schema version's file sets are
+        read with the columns the metadata declares for them
+        (``_file_schema``), so no footer is sampled for schema inference.
         """
         entries, _pruned = self.plan_file_sets(buckets, ts_min, ts_max)
         if not entries:
@@ -533,14 +635,14 @@ class LakeTable:
             )
         parts = []
         for sv, paths in sorted(by_sv.items()):
-            df = self.spark.read.parquet(*paths)
+            df = self.spark.read.schema(self._file_schema(sv)).parquet(*paths)
             # resolve by FIELD ID against the schema each file set was
             # written with: renames map, dropped-and-readded names NULL
             part = project_written(df, self.written_schema(sv), schema,
                                    keep_extra=internal)
             # _bucket is a partition directory on disk, not a stored column —
             # recompute it (same deterministic expr as the write path)
-            if internal and "_bucket" not in part.columns:
+            if internal:
                 part = part.withColumn("_bucket", self.bucket_expr(F.col(self.bucket_key)))
             parts.append(part)
         out = reduce(lambda a, b: a.unionByName(b), parts)
@@ -589,13 +691,12 @@ class LakeTable:
         (it commutes with the per-key argmax) so the parquet scan skips
         row groups via dictionary/stats filters, then folds only the
         surviving rows. The read path a transcript-serving API would use —
-        O(one bucket's matching row groups), never O(table)."""
-        b = (
-            self.spark.createDataFrame([(key_value,)], [self.bucket_key])
-            .select(self.bucket_expr(F.col(self.bucket_key)).alias("b"))
-            .first()["b"]
-        )
-        raw = self.read_buckets([int(b)], with_internal=True, fold=False)
+        O(one bucket's matching row groups), never O(table).
+
+        The bucket id is hashed on the driver (``bucket_of``) under the
+        key's declared type, so building the frame runs no Spark job; the
+        caller's action is the only one."""
+        raw = self.read_buckets([self.bucket_of(key_value)], with_internal=True, fold=False)
         hit = raw.where(F.col(self.bucket_key) == F.lit(key_value))
         folded = self._lww_fold(hit)
         return folded.where(~F.coalesce(F.col("_tombstone"), F.lit(False))).select(

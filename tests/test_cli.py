@@ -77,3 +77,14 @@ def test_route_view_cli_pins_to_complete_epoch(spark, tmp_path, capsys):
     eng = CdcEngine(spark, str(tmp_path / "spine"), num_buckets=2)
     eng.replay(log)
     assert sum(view["tables"].values()) == eng.table.snapshot_df().count()
+
+
+def test_route_view_cli_before_any_epoch_is_json_error(spark, tmp_path, capsys):
+    """No router epoch has completed under --base yet: `route-view` keeps
+    the JSON-line contract — one error object on stdout and a nonzero
+    exit code — instead of escaping with a FileNotFoundError traceback."""
+    rc = main(["route-view", "--base", str(tmp_path / "routed")])
+    (line,) = _json_lines(capsys.readouterr().out)
+    assert rc != 0
+    assert line["error"] == "no_complete_epoch"
+    assert "no complete router epoch" in line["detail"]

@@ -135,3 +135,25 @@ def test_expunged_delete_does_not_block_later_reinsert(spark, tmp_path):
                  for r in dst.snapshot_df().collect())
     assert want == [("k", 0, "revived"), ("x", 0, "other")]
     assert got == want
+
+
+def test_malformed_expunge_horizon_skips_only_itself():
+    """One unparseable expunge horizon next to valid ones must not throw
+    away the valid ones: the orderless-delete stamp still comes from the
+    newest PARSEABLE horizon (a watermark stamp could block a legitimate
+    re-insert forever). Mixed naive/tz-aware stamps compare in UTC; the
+    watermark fallback applies only when nothing parses."""
+    from etl_spark.cdc.replicate import _newest_horizon
+
+    snaps = [
+        {"kind": "delta"},
+        {"kind": "expunge", "before_op_ts": "2025-01-01 00:00:01"},
+        {"kind": "expunge", "before_op_ts": "2025-1-1 0:0:9"},  # Spark-lax only
+        {"kind": "expunge", "before_op_ts": "2025-01-01T00:00:05+01:00"},
+        {"kind": "expunge"},
+    ]
+    assert _newest_horizon(snaps) == dt.datetime(2025, 1, 1, 0, 0, 1)
+    snaps.append({"kind": "expunge", "before_op_ts": "2025-01-01 00:00:02"})
+    assert _newest_horizon(snaps) == dt.datetime(2025, 1, 1, 0, 0, 2)
+    assert _newest_horizon([{"kind": "expunge", "before_op_ts": "garbage"}]) is None
+    assert _newest_horizon([]) is None
