@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..lake.schema import quote
+
 KEY = ["conv_id", "turn_idx"]
 ORDER = ["op_ts", "lsn"]
 
@@ -58,17 +60,14 @@ def lww_dedup(
     """
     key = key or KEY
     order = order or ORDER
-    payload = [c for c in changes.columns if c not in key]
-    # order columns lead the struct => lexicographic max == last writer
-    packed = F.max(F.struct(*[F.col(c) for c in order], *[F.col(c) for c in payload if c not in order])).alias("_w")
+    payload = [c for c in changes.columns if c not in key and c not in order]
+    # order columns lead the struct => lexicographic max == last writer.
+    # SQL strings, not Column chains: this fold is on every read plan, and
+    # a Column per field costs py4j round trips per column.
+    packed = F.expr(f"max(struct({', '.join(map(quote, order + payload))})) AS _w")
     extras = [expr.alias(name) for name, expr in (extra_aggs or {}).items()]
     out = changes.groupBy(*key).agg(packed, *extras)
-    return out.select(
-        *key,
-        *[F.col(f"_w.{c}").alias(c) for c in order],
-        *[F.col(f"_w.{c}").alias(c) for c in payload if c not in order],
-        *[F.col(name) for name in (extra_aggs or {})],
-    )
+    return out.selectExpr(*map(quote, key), "_w.*", *map(quote, extra_aggs or {}))
 
 
 # 2^64 — shift for packing (op_ts_us, lsn) into one DECIMAL(38,0).

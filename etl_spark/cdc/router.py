@@ -53,6 +53,8 @@ batch once before the loop — a knob, not a default.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -96,8 +98,6 @@ def route_batch(
     the FULL destination set while applying to only the newly-created
     tables — otherwise a historical row whose value belongs to an
     existing table would land its image in the rest table too."""
-    import os
-
     stats: dict[str, ApplyStats] = {}
     known = list(tables) if rest_known is None else list(rest_known)
     if rest is not None:
@@ -176,6 +176,23 @@ def _safe_route_value(val: str) -> bool:
     )
 
 
+def _is_table_dir(base_path: str, name: str) -> bool:
+    return os.path.isdir(os.path.join(base_path, name, "_meta"))
+
+
+def _persisted_routes(base_path: str, rest_name: str | None) -> list[str]:
+    """Route values that already have a table under ``base_path``: the
+    safe-named directories holding table metadata, minus the rest table."""
+    try:
+        names = os.listdir(base_path)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        d for d in names
+        if d != rest_name and _safe_route_value(d) and _is_table_dir(base_path, d)
+    )
+
+
 def discover_routes(
     changes: DataFrame, route_col: str = "role"
 ) -> tuple[list[str], bool]:
@@ -206,8 +223,6 @@ def _ensure_tables(
     num_buckets: int,
     rest_name: str | None = None,
 ) -> None:
-    import os
-
     from .engine import CdcEngine
 
     for val in vals:
@@ -243,8 +258,6 @@ def _ensure_rest(
     disables the rest table — then such a row would be silently lost
     (general mode tombstones it everywhere; stable mode routes it
     nowhere), so that configuration FAILS LOUDLY instead."""
-    import os
-
     from .engine import CdcEngine
 
     if rest is not None or not need:
@@ -375,14 +388,25 @@ def stream_route(
     either fence), so a stream restart doesn't re-replay the log into
     established tables.
     """
-    import os
-
     from .engine import CHANGE_SCHEMA, CdcEngine, fencing_namespace
 
     source = fencing_namespace(checkpoint_dir, "router")
     bf_source = f"{source}_backfill"
+    # A restarted stream starts from PERSISTED state, not an empty map:
+    # every destination a previous run created is open from the first
+    # batch on, exactly as in a run that never stopped. Otherwise an
+    # established table whose value has not recurred yet would get no
+    # move tombstones, no place in the rest table's "routed elsewhere"
+    # set, and no entry in the epoch marker (consistent_view would
+    # silently drop it).
     tables: dict[str, LakeTable] = {}
-    rest_box: list[LakeTable | None] = [None]
+    _ensure_tables(spark, base_path, tables, _persisted_routes(base_path, rest_name),
+                   num_buckets, rest_name)
+    rest_box: list[LakeTable | None] = [_ensure_rest(
+        spark, base_path, None,
+        rest_name is not None and _is_table_dir(base_path, rest_name),
+        rest_name, num_buckets,
+    )]
 
     reader = (
         spark.readStream.schema(schema or CHANGE_SCHEMA)
@@ -417,32 +441,19 @@ def stream_route(
             )
             rest_known = list(tables)
             if fresh_rest is not None:
-                # The rest backfill's "routed elsewhere" set must come
-                # from PERSISTENT state, not the in-memory dict: after a
-                # stream restart, established destinations whose values
-                # haven't recurred yet are absent from `tables`, and the
-                # whole-log prior also carries not-yet-sighted FUTURE
-                # values — either would land historical rows in the rest
+                # The whole-log prior also carries not-yet-sighted FUTURE
+                # values; without them in the rest backfill's "routed
+                # elsewhere" set, historical rows would land in the rest
                 # table as live images that (their source batches being
                 # already processed, and stable mode writing no
                 # cross-table tombstones) are never tombstoned, silently
-                # breaking union-equals-spine. Known = in-memory tables
-                # ∪ existing table directories under base_path ∪ every
+                # breaking union-equals-spine. Known = every destination
+                # (`tables` holds the persisted ones, see below) ∪ every
                 # safe value anywhere in the prior log (each WILL get its
                 # own table on first sight).
-                known = set(tables)
-                try:
-                    for d in os.listdir(base_path):
-                        if (
-                            d != rest_name
-                            and _safe_route_value(d)
-                            and os.path.isdir(os.path.join(base_path, d, "_meta"))
-                        ):
-                            known.add(d)
-                except FileNotFoundError:
-                    pass
-                known.update(discover_routes(prior, route_col)[0])
-                rest_known = sorted(known)
+                rest_known = sorted(
+                    set(tables) | set(discover_routes(prior, route_col)[0])
+                )
             route_batch(
                 fresh, prior, int(batch_id), route_col=route_col,
                 source=bf_source, stable_routes=stable_routes,

@@ -15,7 +15,6 @@ from dataclasses import dataclass
 from functools import lru_cache
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # (from_type -> to_type) promotions that are lossless, per Iceberg's spec.
@@ -215,31 +214,49 @@ def widen_type(cur: T.DataType, inc: T.DataType) -> T.DataType | None:
     return None
 
 
-def coerce_expr(col: "F.Column", src: T.DataType, dst: T.DataType) -> "F.Column":
-    """Read-side coercion of a written column to the current type.
+def quote(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def coerce_expr(ref: str, src: T.DataType, dst: T.DataType, depth: int = 0) -> str:
+    """Read-side coercion of a written column to the current type, as a
+    SQL expression over the SQL reference ``ref`` (a quoted column).
 
     Plain CAST cannot EXTEND a struct (Spark requires equal field
     counts), so structs are rebuilt field-by-field — fields the file
     lacks become NULL, matching fields coerce recursively — while a
     NULL struct row stays NULL (a rebuilt struct of NULL fields is not
-    the same thing). Arrays of structs recurse through transform().
-    Everything else is an ordinary cast.
+    the same thing). Arrays recurse through ``transform(x, e -> ...)``
+    (``depth`` keeps nested lambda variables distinct). Everything else
+    is an ordinary cast.
+
+    Projections are built as SQL strings because building them as Column
+    chains costs several py4j round trips per column and nested field.
     """
     if src == dst:
-        return col
+        return ref
     if isinstance(src, T.StructType) and isinstance(dst, T.StructType):
         by_name = {f.name: f for f in src.fields}
         parts = []
         for f in dst.fields:
             g = by_name.get(f.name)
-            if g is None:
-                parts.append(F.lit(None).cast(f.dataType).alias(f.name))
-            else:
-                parts.append(coerce_expr(col[f.name], g.dataType, f.dataType).alias(f.name))
-        return F.when(col.isNull(), F.lit(None).cast(dst)).otherwise(F.struct(*parts))
+            value = (
+                f"CAST(NULL AS {f.dataType.simpleString()})" if g is None
+                else coerce_expr(f"{ref}.{quote(f.name)}", g.dataType,
+                                 f.dataType, depth)
+            )
+            parts.append(f"{_sql_string(f.name)}, {value}")
+        return f"IF({ref} IS NULL, NULL, named_struct({', '.join(parts)}))"
     if isinstance(src, T.ArrayType) and isinstance(dst, T.ArrayType):
-        return F.transform(col, lambda x: coerce_expr(x, src.elementType, dst.elementType))
-    return col.cast(dst)
+        x = f"_e{depth}"
+        inner = coerce_expr(x, src.elementType, dst.elementType, depth + 1)
+        return f"transform({ref}, {x} -> {inner})"
+    return f"CAST({ref} AS {dst.simpleString()})"
 
 
 def project_written(
@@ -259,23 +276,17 @@ def project_written(
     readd can't resurrect old bytes (the guarantee name-based alignment
     cannot give). ``keep_extra`` engine internals pass through by name.
     """
-    have = {f.name for f in df.schema.fields}
+    have = set(df.columns)
     written_by_id = written.by_id()
-    cols = []
+    exprs = []
     for f in current.fields:
         w = written_by_id.get(f.id)
         if w is not None and w.name in have:
-            cols.append(
-                coerce_expr(
-                    F.col(w.name), _parse_type(w.type), _parse_type(f.type)
-                ).alias(f.name)
-            )
+            e = coerce_expr(quote(w.name), _parse_type(w.type), _parse_type(f.type))
         else:
-            cols.append(F.lit(None).cast(_parse_type(f.type)).alias(f.name))
-    for name in keep_extra or []:
-        if name in have:
-            cols.append(F.col(name))
-    return df.select(*cols)
+            e = f"CAST(NULL AS {f.type})"
+        exprs.append(f"{e} AS {quote(f.name)}")
+    return df.selectExpr(*exprs, *[quote(n) for n in keep_extra or [] if n in have])
 
 
 def align(df: DataFrame, schema: TableSchema, keep_extra: list[str] | None = None) -> DataFrame:
@@ -287,17 +298,11 @@ def align(df: DataFrame, schema: TableSchema, keep_extra: list[str] | None = Non
     (Iceberg-style schema-on-read).
     """
     have = {f.name: f.dataType for f in df.schema.fields}
-    cols = []
+    exprs = []
     for f in schema.fields:
         if f.name in have:
-            cols.append(
-                coerce_expr(
-                    F.col(f.name), have[f.name], _parse_type(f.type)
-                ).alias(f.name)
-            )
+            e = coerce_expr(quote(f.name), have[f.name], _parse_type(f.type))
         else:
-            cols.append(F.lit(None).cast(_parse_type(f.type)).alias(f.name))
-    for name in keep_extra or []:
-        if name in have:
-            cols.append(F.col(name))
-    return df.select(*cols)
+            e = f"CAST(NULL AS {f.type})"
+        exprs.append(f"{e} AS {quote(f.name)}")
+    return df.selectExpr(*exprs, *[quote(n) for n in keep_extra or [] if n in have])

@@ -58,7 +58,7 @@ from .metastore import (  # noqa: F401 — _atomic_write_text re-exported
     _atomic_write_text,
     _fsync_dir,
 )
-from .schema import TableSchema, align, project_written
+from .schema import TableSchema, align, project_written, quote
 
 META_DIR = "_meta"
 HINT = "version-hint.text"
@@ -74,6 +74,8 @@ _INTERNAL_TYPES = {
     "_tombstone": T.BooleanType(),
     "_bucket": T.IntegerType(),
 }
+# Filter keeping the rows of a folded read that are not tombstones.
+_LIVE = "NOT coalesce(_tombstone, false)"
 ORDER_COLS = ["_op_ts", "_lsn"]
 
 # -- driver-side bucket hash ----------------------------------------------------
@@ -638,14 +640,14 @@ class LakeTable:
             df = self.spark.read.schema(self._file_schema(sv)).parquet(*paths)
             # resolve by FIELD ID against the schema each file set was
             # written with: renames map, dropped-and-readded names NULL
-            part = project_written(df, self.written_schema(sv), schema,
-                                   keep_extra=internal)
-            # _bucket is a partition directory on disk, not a stored column —
-            # recompute it (same deterministic expr as the write path)
-            if internal:
-                part = part.withColumn("_bucket", self.bucket_expr(F.col(self.bucket_key)))
-            parts.append(part)
+            parts.append(project_written(df, self.written_schema(sv), schema,
+                                         keep_extra=internal))
         out = reduce(lambda a, b: a.unionByName(b), parts)
+        if internal:
+            # _bucket is a partition directory on disk, not a stored column —
+            # recompute it (same deterministic expr as bucket_expr)
+            out = out.selectExpr("*", f"CAST(pmod(xxhash64({quote(self.bucket_key)}), "
+                                      f"{self.num_buckets}) AS INT) AS _bucket")
         if fold:
             out = self._lww_fold(out)
             if not with_internal:
@@ -676,14 +678,14 @@ class LakeTable:
         """
         df = self.read_buckets(buckets, with_internal=True, fold=True,
                                ts_min=ts_min, ts_max=ts_max)
-        df = df.where(~F.coalesce(F.col("_tombstone"), F.lit(False)))
+        df = df.where(_LIVE)
         col = self.stats_col
         if col is not None:
             if ts_min is not None:
                 df = df.where(F.col(col) >= F.lit(_parse_ts(ts_min)))
             if ts_max is not None:
                 df = df.where(F.col(col) <= F.lit(_parse_ts(ts_max)))
-        return df.select(*self.schema().names())
+        return df.selectExpr(*map(quote, self.schema().names()))
 
     def lookup(self, key_value) -> DataFrame:
         """Point lookup by bucket key (e.g. one conv_id): prunes to the
@@ -698,9 +700,8 @@ class LakeTable:
         caller's action is the only one."""
         raw = self.read_buckets([self.bucket_of(key_value)], with_internal=True, fold=False)
         hit = raw.where(F.col(self.bucket_key) == F.lit(key_value))
-        folded = self._lww_fold(hit)
-        return folded.where(~F.coalesce(F.col("_tombstone"), F.lit(False))).select(
-            *self.schema().names()
+        return self._lww_fold(hit).where(_LIVE).selectExpr(
+            *map(quote, self.schema().names())
         )
 
     def changes_between(
@@ -767,41 +768,31 @@ class LakeTable:
         o = project_written(o, old.schema(), new_s, keep_extra=INTERNAL_COLS)
         n = new.read_buckets(buckets, with_internal=True, fold=True)
 
-        key = new.key_cols
-        o = o.select(*[F.col(c).alias(f"_o_{c}") for c in o.columns])
-        n = n.select(*[F.col(c).alias(f"_n_{c}") for c in n.columns])
-        cond = [o[f"_o_{k}"] == n[f"_n_{k}"] for k in key]
-        j = o.join(n, cond, "full_outer")
+        # renames, change type and column pick as SQL strings: one
+        # selectExpr each instead of several py4j round trips per column
+        o = o.selectExpr(*[f"{quote(c)} AS {quote('_o_' + c)}" for c in o.columns])
+        n = n.selectExpr(*[f"{quote(c)} AS {quote('_n_' + c)}" for c in n.columns])
+        cond = " AND ".join(
+            f"{quote('_o_' + k)} = {quote('_n_' + k)}" for k in new.key_cols
+        )
+        j = o.join(n, F.expr(cond), "full_outer")
 
-        live_o = F.col("_o__lsn").isNotNull() & ~F.coalesce(
-            F.col("_o__tombstone"), F.lit(False)
-        )
-        live_n = F.col("_n__lsn").isNotNull() & ~F.coalesce(
-            F.col("_n__tombstone"), F.lit(False)
-        )
-        bumped = (F.col("_o__op_ts") != F.col("_n__op_ts")) | (
-            F.col("_o__lsn") != F.col("_n__lsn")
-        )
+        live_o = "(_o__lsn IS NOT NULL AND NOT coalesce(_o__tombstone, false))"
+        live_n = "(_n__lsn IS NOT NULL AND NOT coalesce(_n__tombstone, false))"
+        bumped = "(_o__op_ts != _n__op_ts OR _o__lsn != _n__lsn)"
+        is_del = f"{live_o} AND NOT {live_n}"
         change = (
-            F.when(~live_o & live_n, "insert")
-            .when(live_o & ~live_n, "delete")
-            .when(live_o & live_n & bumped, "update_postimage")
+            f"CASE WHEN NOT {live_o} AND {live_n} THEN 'insert' "
+            f"WHEN {is_del} THEN 'delete' "
+            f"WHEN {live_o} AND {live_n} AND {bumped} THEN 'update_postimage' END"
         )
-        is_del = change == "delete"
         cols = [
-            F.when(is_del, F.col(f"_o_{c}")).otherwise(F.col(f"_n_{c}")).alias(c)
+            f"IF({is_del}, {quote('_o_' + c)}, {quote('_n_' + c)}) AS {quote(c)}"
             for c in new_s.names()
         ]
-        extra = []
-        if with_ordering:
-            extra = [
-                F.col("_n__op_ts").alias("_op_ts"),
-                F.col("_n__lsn").alias("_lsn"),
-            ]
-        return (
-            j.withColumn("_change_type", change)
-            .where(F.col("_change_type").isNotNull())
-            .select(*cols, "_change_type", *extra)
+        extra = ["_n__op_ts AS _op_ts", "_n__lsn AS _lsn"] if with_ordering else []
+        return j.selectExpr(*cols, f"{change} AS _change_type", *extra).where(
+            "_change_type IS NOT NULL"
         )
 
     def watermark_any(self) -> str | None:

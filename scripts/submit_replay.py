@@ -4,7 +4,8 @@
         --log LOG_DIR --table TABLE_DIR [--buckets N]
 
 On a cluster the SparkSession comes from spark-submit's conf (master,
-executors); the engine only sets SQL-level knobs.
+executors); the engine only sets its SQL-level knobs
+(``etl_spark.session.SQL_CONF``) on the builder that creates the session.
 """
 import argparse
 import json
@@ -12,6 +13,11 @@ import json
 from pyspark.sql import SparkSession
 
 from etl_spark.cdc.engine import CdcEngine
+from etl_spark.session import with_sql_conf
+
+
+def session() -> SparkSession:
+    return with_sql_conf(SparkSession.builder.appName("etl_spark_replay")).getOrCreate()
 
 
 def main():
@@ -21,8 +27,7 @@ def main():
     p.add_argument("--buckets", type=int, default=256)
     args = p.parse_args()
 
-    spark = SparkSession.builder.appName("etl_spark_replay").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = session()
     eng = CdcEngine(spark, args.table, num_buckets=args.buckets)
     results = eng.replay(args.log)
     print(json.dumps({

@@ -204,16 +204,24 @@ def test_committed_files_match_declared_schema(spark, tmp_path):
     assert got[("e0", 0)] == "it" and got[("b2", 2)] is None  # readd never resurrects
 
 
-def test_read_planning_launches_no_jobs(spark, tmp_path):
-    """Building the frames of lookup / snapshot_df / changes_between runs
-    no Spark job; the caller's action is the first."""
-    eng = CdcEngine(spark, str(tmp_path / "tbl"), num_buckets=4)
-    t = eng.table
+def _three_epoch_table(spark, path, evolve=False):
+    """40 keys updated in three epochs; ``evolve`` adds a column in the last."""
+    t = CdcEngine(spark, path, num_buckets=4).table
     for e in range(3):
         rows = [("U", f"c{i}", e, "user", f"v{e}", None, TS("2025-01-01 00:00:00"),
                  TS("2025-01-01 00:00:00") + dt.timedelta(minutes=e), e * 100 + i)
                 for i in range(40)]
-        apply_batch(t, spark.createDataFrame(rows, schema=CHANGE_SCHEMA), epoch=e)
+        df = spark.createDataFrame(rows, schema=CHANGE_SCHEMA)
+        if evolve and e == 2:
+            df = df.withColumn("lang", F.lit("en"))
+        apply_batch(t, df, epoch=e)
+    return t
+
+
+def test_read_planning_launches_no_jobs(spark, tmp_path):
+    """Building the frames of lookup / snapshot_df / changes_between runs
+    no Spark job; the caller's action is the first."""
+    t = _three_epoch_table(spark, str(tmp_path / "tbl"))
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     plans = {
@@ -233,3 +241,164 @@ def test_read_planning_launches_no_jobs(spark, tmp_path):
             assert list(tracker.getJobIdsForGroup(group)), name
     finally:
         sc.setJobGroup("", "")
+
+
+# -- py4j round trips per plan -------------------------------------------------
+
+# py4j round trips the calling thread makes to build each frame on a
+# two-schema-version table. Measured on PySpark 4.1.2: lookup 121,
+# snapshot_df 122, changes_between 255 — against 1 065, 1 046 and 3 180
+# with call-site capture on and projections built as Column chains.
+PY4J_BUDGET = {"lookup": 150, "snapshot": 150, "diff": 300}
+
+
+def test_get_spark_turns_call_site_capture_off(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+
+
+def test_read_plans_fit_py4j_budget(spark, tmp_path):
+    import gc
+    import threading
+
+    t = _three_epoch_table(spark, str(tmp_path / "tbl"), evolve=True)
+    assert len(t._meta["schemas"]) == 2
+    plans = {
+        "lookup": lambda: t.lookup("c7"),
+        "snapshot": lambda: t.snapshot_df(),
+        "diff": lambda: t.changes_between(t.version - 2),
+    }
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+    builder = threading.get_ident()
+
+    def counted(*args, **kwargs):
+        # py4j's finalizer thread releases dead JVM references on its own
+        # schedule; only the building thread's round trips are the plan's
+        if threading.get_ident() == builder:
+            calls[0] += 1
+        return send(*args, **kwargs)
+
+    used = {}
+    for name, plan in plans.items():
+        plan()  # warm the per-process caches (type parsing, JVM classes)
+        gc.collect()  # release earlier frames outside the counted window
+        gc.disable()
+        client.send_command = counted
+        try:
+            calls[0] = 0
+            df = plan()
+            used[name] = calls[0]
+        finally:
+            client.send_command = send
+            gc.enable()
+        assert df.count() > 0, name
+        del df
+    assert all(used[n] <= PY4J_BUDGET[n] for n in plans), used
+
+
+def test_submit_entry_point_session_takes_engine_conf(tmp_path):
+    """The spark-submit entry point builds its own session. It must get the
+    engine's SQL confs: int64-micros timestamps, whose footers carry the
+    min/max that window pruning reads (legacy INT96 has none), and
+    call-site capture off. Runs in a fresh process, because the flag is a
+    static conf that only a session-creating builder can set."""
+    import json
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "ts")
+    probe = textwrap.dedent("""
+        import datetime, importlib.util, json, sys
+        from pyspark.errors.utils import is_debugging_enabled
+        spec = importlib.util.spec_from_file_location("submit_replay", sys.argv[1])
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        spark = mod.session()
+        spark.createDataFrame([(datetime.datetime(2025, 1, 1),)], "ts timestamp") \\
+            .coalesce(1).write.parquet(sys.argv[2])
+        print(json.dumps({
+            "debugging": spark.conf.get("spark.python.sql.dataFrameDebugging.enabled"),
+            "captures": is_debugging_enabled(),
+        }))
+        spark.stop()
+    """)
+    env = dict(os.environ, PYTHONPATH=repo,
+               PYSPARK_SUBMIT_ARGS="--master local[1] --driver-memory 512m pyspark-shell")
+    res = subprocess.run(
+        [sys.executable, "-c", probe, os.path.join(repo, "scripts", "submit_replay.py"), out],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    got = json.loads(res.stdout.strip().splitlines()[-1])
+    assert got == {"debugging": "false", "captures": False}
+    part = next(n for n in os.listdir(out) if n.endswith(".parquet"))
+    meta = pq.ParquetFile(os.path.join(out, part)).metadata
+    col = meta.schema.column(0)
+    assert (col.physical_type, col.converted_type) == ("INT64", "TIMESTAMP_MICROS")
+    assert meta.row_group(0).column(0).statistics.has_min_max
+
+
+# -- coerce_expr's array branch ------------------------------------------------
+
+def test_array_of_struct_evolution_reads_back(spark, tmp_path):
+    """An ``array<struct<...>>`` column whose element gains a field and
+    whose inner int widens to bigint. Rows written before the change read
+    the new field as NULL and the widened one at the new type; a NULL
+    array and a NULL element stay NULL — through the folded snapshot,
+    a point lookup and a compacted base."""
+    old_item = T.StructType([T.StructField("a", T.IntegerType()),
+                             T.StructField("b", T.StringType())])
+    new_item = T.StructType([T.StructField("a", T.LongType()),
+                             T.StructField("b", T.StringType()),
+                             T.StructField("c", T.StringType())])
+
+    def schema(item):
+        return T.StructType(CHANGE_SCHEMA.fields
+                            + [T.StructField("items", T.ArrayType(item))])
+
+    def row(conv, lsn, items):
+        return ("I", conv, 0, "user", conv, None, TS("2025-01-01 00:00:00"),
+                TS("2025-01-01 00:00:00") + dt.timedelta(seconds=lsn), lsn, items)
+
+    t = CdcEngine(spark, str(tmp_path / "tbl"), num_buckets=4).table
+    apply_batch(t, spark.createDataFrame([
+        row("old", 1, [(1, "x"), None, (2, None)]),
+        row("nul", 2, None),
+        row("emp", 3, []),
+    ], schema(old_item)), epoch=0)
+    apply_batch(t, spark.createDataFrame([
+        row("new", 4, [(2**40, "y", "z")]),
+    ], schema(new_item)), epoch=1)
+    assert dict((f.name, f.type) for f in t.schema().fields)["items"] == \
+        "array<struct<a:bigint,b:string,c:string>>"
+
+    want = {
+        "old": [(1, "x", None), None, (2, None, None)],
+        "nul": None,
+        "emp": [],
+        "new": [(2**40, "y", "z")],
+    }
+
+    def items(rows):
+        return {r.conv_id: None if r["items"] is None else
+                [None if e is None else (e.a, e.b, e.c) for e in r["items"]]
+                for r in rows}
+
+    def check():
+        snap = t.snapshot_df()
+        assert snap.schema["items"].dataType == T.ArrayType(new_item)
+        assert items(snap.collect()) == want
+        for conv in want:
+            assert items(t.lookup(conv).collect()) == {conv: want[conv]}
+
+    check()
+    t.compact(list(range(t.num_buckets)))
+    t.refresh()
+    assert all(not slot["deltas"] for slot in t._meta["files"].values())
+    check()

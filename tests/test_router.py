@@ -668,6 +668,97 @@ def test_stream_route_writes_epoch_markers(spark, tmp_path):
     assert {r.text for r in views["user"].collect()} == {"u0"}
     assert {r.text for r in views["assistant"].collect()} == {"a0"}
 
+
+def test_stream_restart_marker_keeps_established_tables(spark, tmp_path):
+    """After a checkpoint restart, an epoch that routes only some values
+    must still record every established destination in its marker:
+    consistent_view reads the newest marker, and a table missing from it
+    would silently vanish from the consistent view."""
+    import datetime as dt
+    import os
+
+    from etl_spark.cdc.engine import CHANGE_SCHEMA, fencing_namespace
+    from etl_spark.cdc.route_epochs import consistent_view, latest_route_epoch
+    from etl_spark.cdc.router import stream_route
+
+    T = lambda s: dt.datetime(2025, 1, 1, 0, 0, s)
+    log = str(tmp_path / "log")
+    base = str(tmp_path / "routed")
+    ckpt = str(tmp_path / "ckpt")
+
+    def _write(i, rows):
+        spark.createDataFrame(rows, schema=CHANGE_SCHEMA).coalesce(1) \
+            .write.parquet(os.path.join(log, f"epoch={i:05d}"))
+
+    def _run():
+        q = stream_route(spark, log, base, ckpt, route_col="role",
+                         num_buckets=4, max_files_per_trigger=1)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    _write(0, [("I", "a", 0, "user", "u0", None, T(0), T(1), 1),
+               ("I", "b", 0, "assistant", "a0", None, T(0), T(1), 2)])
+    _run()
+    # restart; the only new epoch routes 'user' alone
+    _write(1, [("U", "a", 0, "user", "u1", None, T(0), T(3), 3)])
+    _run()
+
+    source = fencing_namespace(ckpt, "router")
+    marker = latest_route_epoch(base, source)
+    assert marker["epoch"] == 1
+    assert set(marker["tables"]) == {"assistant", "user"}
+    ep, views = consistent_view(spark, base, source)
+    assert ep == 1
+    assert {r.text for r in views["user"].collect()} == {"u1"}
+    assert {r.text for r in views["assistant"].collect()} == {"a0"}
+
+
+def test_stream_restart_tombstones_moves_out_of_established_tables(spark, tmp_path):
+    """General mode after a checkpoint restart: a key whose route value
+    moves away from an established table that the new epoch does not
+    route to must still be tombstoned there, as in a run that never
+    stopped — else the key is live in two tables and union != spine."""
+    import datetime as dt
+    import os
+
+    from etl_spark.cdc.engine import CHANGE_SCHEMA
+    from etl_spark.cdc.router import stream_route
+    from etl_spark.lake.table import LakeTable
+
+    T = lambda s: dt.datetime(2025, 1, 1, 0, 0, s)
+    log = str(tmp_path / "log")
+    base = str(tmp_path / "routed")
+    ckpt = str(tmp_path / "ckpt")
+
+    def _write(i, rows):
+        spark.createDataFrame(rows, schema=CHANGE_SCHEMA).coalesce(1) \
+            .write.parquet(os.path.join(log, f"epoch={i:05d}"))
+
+    def _run():
+        q = stream_route(spark, log, base, ckpt, route_col="role",
+                         num_buckets=4, max_files_per_trigger=1)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    _write(0, [("I", "a", 0, "user", "u0", None, T(0), T(1), 1),
+               ("I", "b", 0, "assistant", "a0", None, T(0), T(1), 2)])
+    _run()
+    # restart; 'b' moves from assistant to user
+    _write(1, [("U", "b", 0, "user", "moved", None, T(0), T(3), 3)])
+    _run()
+
+    def texts(name):
+        t = LakeTable(spark, os.path.join(base, name))
+        return {(r.conv_id, r.text) for r in t.snapshot_df().collect()}
+
+    assert texts("user") == {("a", "u0"), ("b", "moved")}
+    assert texts("assistant") == set()
+
+
 def test_route_epoch_source_dirname_is_safe_and_collision_free():
     """Fencing-source strings (checkpoint-lineage suffixed, arbitrary
     user content) become marker directory names — sanitization must
